@@ -1,35 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the test-data generator writes timestamp[us] with
-      // isAdjustedToUTC=false; without this, Spark 4 infers
-      // TIMESTAMP_NTZ and unix_micros/watermarks reject the column.
-      // Reading as TIMESTAMP under the UTC session zone yields the
-      // same values DuckDB sees for the same bytes.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan ON TOP of cached plans too: persisted frames
-      // otherwise pin their shuffle partitioning, and a union of many
-      // small cached branches schedules partitions-per-branch tiny
-      // tasks (measured 2x wall on g_assembly at local[32])
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // scale-adaptive parallelism floor — rationale + A/B evidence on
-      // GraftSession.minCoalescedDefault (the one place the default
-      // and env knob live)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        GraftSession.minCoalescedDefault)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     // touch every table once so the first timed query doesn't absorb
     // JVM/codegen/file-listing warmup
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -151,17 +124,21 @@ object Bench {
     // stream_* paths had never been benched — additions-only, same
     // timed noop-sink loop; each stream fn drains its micro-batches
     // and returns the terminal state frame)
-    val results = (SparkEntry.benchQueries ++ SparkEntry.streamQueries)
+    val runs = (SparkEntry.benchQueries ++ SparkEntry.streamQueries)
       .toSeq.sortBy(_._1)
       .filter { case (name, _) =>
         only.forall(_.exists(p => name == p || name.startsWith(p))) }
       .map { case (name, fn) =>
+      // a rep that throws is no sample: its time-to-failure would pose
+      // as a fast run, so the entry is reported under "failed" instead
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         // noop sink: evaluates every output row (count() would let
         // Catalyst prune projection-only work and time ~nothing)
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
+        val ok =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name: $e"); false }
         val dt = (System.nanoTime() - t0) / 1e9
         // operators register every persist() and localCheckpoint() block
         // with the global CacheScope; releasing it between queries drops
@@ -177,8 +154,12 @@ object Bench {
         // is designed to be driven, not a substitute for the unpersist
         // discipline above.
         System.gc()
-        dt
-      }.sorted
+        if (ok) Some(dt) else None
+      }
+      name -> (if (times.contains(None)) None else Some(times.flatten.sorted))
+    }
+    val failed = runs.collect { case (name, None) => name }
+    val results = runs.collect { case (name, Some(times)) =>
       // true median: for even reps the two middle samples are averaged
       // (picking times(n/2) alone reported the max of a 2-rep run)
       name -> (if (times.length % 2 == 1) times(times.length / 2)
@@ -249,7 +230,8 @@ object Bench {
     }
     val regJson =
       if (regressions.isEmpty) "" else s""","regressions":${regressions.mkString("{", ",", "}")}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$regJson}""")
+    val failJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$regJson,"failed":$failJson}""")
     spark.stop()
   }
 }

@@ -1,40 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Single-query bench harness for iterating on one operator:
-  * `runMain graft.BenchOne <queryName> [reps]`. Same session config as
-  * [[Bench]]; prints per-rep seconds so warm-up cost is visible.
+  * `runMain graft.BenchOne <queryName> [reps]`. Prints per-rep seconds
+  * so warm-up cost is visible.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the test-data generator writes timestamp[us] with
-      // isAdjustedToUTC=false; without this, Spark 4 infers
-      // TIMESTAMP_NTZ and unix_micros/watermarks reject the column.
-      // Reading as TIMESTAMP under the UTC session zone yields the
-      // same values DuckDB sees for the same bytes.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan ON TOP of cached plans too: persisted frames
-      // otherwise pin their shuffle partitioning, and a union of many
-      // small cached branches schedules partitions-per-branch tiny
-      // tasks (measured 2x wall on g_assembly at local[32])
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // scale-adaptive parallelism floor — see GraftSession.minCoalescedDefault
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        GraftSession.minCoalescedDefault)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val fn = SparkEntry.benchQueries.get(name).orElse(SparkEntry.queries.get(name))
+      .getOrElse {
+        System.err.println(s"[bench-one] no such query: $name")
+        sys.exit(1)
+      }
+    val spark = GraftSession.fromEnv()
     // SPARK_GRAFT_CONF="k=v;k=v" → runtime conf overrides for A/B runs
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
       kv.split("=", 2) match {
@@ -67,7 +47,6 @@ object BenchOne {
             }
           }
         })
-    val fn = SparkEntry.benchQueries.getOrElse(name, SparkEntry.queries(name))
     // listener events arrive on the async bus; give stragglers a beat
     // before clearing for the last rep / dumping at the end, so the
     // dump neither misses late completions nor blends reps

@@ -1,13 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan dumper for the optimization rounds:
   * `runMain graft.ExplainDump <outDir> <query>[,<query>...]`
   * writes `<outDir>/<query>.txt` with the `.explain("formatted")`
-  * output of each named catalog entry, under the exact session config
-  * [[Bench]] uses. The committed dumps let a reader check plan claims
-  * in OPTIMIZATION_r*.md against the recorded plans without
-  * re-running Spark (producing a dump of course runs a session here —
+  * output of each named catalog entry. The committed dumps let a
+  * reader check plan claims in OPTIMIZATION_r*.md against the recorded
+  * plans without re-running Spark (producing a dump of course runs a session here —
   * and entries built on eager persist/localCheckpoint loops execute
   * their iterative jobs during DataFrame construction).
   *
@@ -22,22 +20,7 @@ object ExplainDump {
       if (args.length > 1) args(1).split(",").toSeq.filter(_.nonEmpty)
       else SparkEntry.benchQueries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // scale-adaptive parallelism floor — see GraftSession.minCoalescedDefault
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        GraftSession.minCoalescedDefault)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       SparkEntry.queries.get(n) match {

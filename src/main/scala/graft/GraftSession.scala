@@ -2,14 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the engine.
+/** The engine's only session factory: every main and the test suite
+  * build their SparkSession through [[builder]].
   *
   * Mirrors the reference's single entry point (main_graph_topraq.py:84-340)
   * but as a SparkSession: UTC session time zone (the reference normalizes
-  * everything to tz-offset datetimes, app/utils.py:34-57), AQE on for
-  * runtime re-planning at scale, and shuffle partitions sized to the
-  * local core count rather than the 200 default (on a real cluster this
-  * is set per-job; AQE coalesces the rest).
+  * everything to tz-offset datetimes, app/utils.py:34-57), AQE (on by
+  * default) re-planning on top of cached plans, and shuffle partitions
+  * sized to the local core count rather than the 200 default (on a real
+  * cluster this is set per-job; AQE coalesces the rest).
   */
 object GraftSession {
 
@@ -65,59 +66,64 @@ object GraftSession {
     }
   }
 
+  /** Every setting the factory applies, master and app name included.
+    * Each entry differs from the spark-sql default; [[builder]] applies
+    * exactly these and `GraftSessionSpec` checks the test session
+    * against them.
+    */
+  private[graft] def settings(master: String,
+                              shufflePartitions: Int): Seq[(String, String)] = Seq(
+    "spark.master" -> master,
+    "spark.app.name" -> "graft",
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    // let AQE re-plan ON TOP of cached plans too: persisted frames
+    // otherwise pin their shuffle partitioning, and a union of many
+    // small cached branches schedules partitions-per-branch tiny
+    // tasks (measured 2x wall on g_assembly at local[32])
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    // scale-adaptive parallelism floor — rationale on
+    // [[minCoalescedDefault]]
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> minCoalescedDefault,
+    "spark.sql.session.timeZone" -> "UTC",
+    // permissive-cast semantics (null on bad parse) to mirror the
+    // DuckDB oracle's TRY_CAST-based SQL
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // the test-data generator writes timestamp[us] with
+    // isAdjustedToUTC=false; without this, Spark 4 infers
+    // TIMESTAMP_NTZ and unix_micros/watermarks reject the column.
+    // Reading as TIMESTAMP under the UTC session zone yields the
+    // same values DuckDB sees for the same bytes.
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    // long-running sessions: broadcast/shuffle state is reclaimed by
+    // ContextCleaner only after a driver GC — which a large driver
+    // heap may not run for hours. Measured 2-40x query inflation
+    // after ~160 back-to-back queries without it (SCALE.md); the
+    // default interval is 30min.
+    "spark.cleaner.periodicGC.interval" -> "5min",
+    // reliable checkpoints (GRAFT_CHECKPOINT_DIR, see CacheScope) are
+    // deleted once their RDD is collected; local checkpoints are
+    // unaffected
+    "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
+    "spark.ui.enabled" -> "false")
+
   def builder(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
               shufflePartitions: Int = 32): SparkSession.Builder =
-    SparkSession.builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan ON TOP of cached plans too: persisted frames
-      // otherwise pin their shuffle partitioning, and a union of many
-      // small cached branches schedules partitions-per-branch tiny
-      // tasks (measured 2x wall on g_assembly at local[32])
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // scale-adaptive parallelism floor — rationale on
-      // [[minCoalescedDefault]]
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        minCoalescedDefault)
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the test-data generator writes timestamp[us] with
-      // isAdjustedToUTC=false; without this, Spark 4 infers
-      // TIMESTAMP_NTZ and unix_micros/watermarks reject the column.
-      // Reading as TIMESTAMP under the UTC session zone yields the
-      // same values DuckDB sees for the same bytes.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      // long-running sessions: broadcast/shuffle state is reclaimed by
-      // ContextCleaner only after a driver GC — which a large driver
-      // heap may not run for hours. Measured 2-40x query inflation
-      // after ~160 back-to-back queries without it (SCALE.md); the
-      // default interval is 30min.
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .config("spark.ui.enabled", "false")
+    SparkSession.builder().config(settings(master, shufflePartitions).toMap)
 
-  def getOrCreate(): SparkSession = {
-    val spark = builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+  def getOrCreate(): SparkSession = start(builder())
+
+  /** The harness mains' session: `local[$SPARK_GRAFT_CPUS]` (default
+    * 4) with one shuffle partition per core.
+    */
+  def fromEnv(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    start(builder(s"local[$cpus]", cpus))
   }
 
-  /** Apply engine defaults to an externally-created session (Verify/Bench
-    * create their own). Idempotent; safe on a running session.
-    */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      minCoalescedDefault)
+  private def start(b: SparkSession.Builder): SparkSession = {
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     spark
   }
 }

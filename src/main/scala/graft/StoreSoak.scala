@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.cypher.{GraphStore, PropertyGraph}
 
 /** Statement-volume soak for the Cypher WRITE surface (round-12
@@ -50,14 +48,7 @@ object StoreSoak {
     val days = if (args.length > 0) args(0).toInt else 90
     val stations = if (args.length > 1) args(1).toInt else 4
     val seedRows = if (args.length > 2) args(2).toLong else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     import spark.implicits._
 
     import org.apache.spark.sql.functions._

@@ -42,9 +42,10 @@ final class CacheScope {
     * store on a cluster): survives executor loss, costs one write +
     * read-back of the frame. Inert locally (env unset → localCheckpoint
     * exactly as before). Reliable checkpoint files are reclaimed by
-    * the ContextCleaner once the RDD handle released here is GC'd
-    * (`spark.cleaner.referenceTracking.cleanCheckpoints=true`), or by
-    * deleting the directory between runs.
+    * the ContextCleaner once the RDD handle released here is GC'd:
+    * [[graft.GraftSession.builder]] sets
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`. A session
+    * built without it leaves them until the directory is deleted.
     */
   private[graft] def checkpoint[T](ds: Dataset[T]): Dataset[T] = synchronized {
     val cp = CacheScope.reliableDir match {
